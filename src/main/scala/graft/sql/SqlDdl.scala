@@ -925,8 +925,8 @@ object SqlDdl {
         case (Some(_), true) => throw new IllegalArgumentException(
           "DELETE with a subquery predicate is not supported on a " +
             "branch — publish or run it on main")
-        case (Some(b), false) => cat.store().deleteOnBranch(t, b,
-          org.apache.spark.sql.functions.expr(cond))
+        case (Some(b), false) => cat.store().deleteWhere(t,
+          org.apache.spark.sql.functions.expr(cond), branch = Some(b))
         case (None, true) => deleteViaSql(cat, t, cond)
         case (None, false) => cat.deleteWhere(t,
           org.apache.spark.sql.functions.expr(cond))
@@ -1330,8 +1330,8 @@ object SqlDdl {
       case (Some(_), true) => throw new IllegalArgumentException(
         "UPDATE with a subquery is not supported on a branch — publish " +
           "or run it on main")
-      case (Some(b), false) => catalog.store().updateOnBranch(table, b,
-        exprs, cond.map(expr))
+      case (Some(b), false) => catalog.store().updateWhere(table,
+        exprs, cond.map(expr), branch = Some(b))
       case (None, true) => updateViaSql(catalog, table, rawAssignments, cond)
       case (None, false) => catalog.updateWhere(table, exprs, cond.map(expr))
     }

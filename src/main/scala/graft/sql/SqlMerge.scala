@@ -266,8 +266,8 @@ object SqlMerge {
       // branch conf set → the COW records on the branch chain instead
       // of committing to the log (Iceberg's branch writes)
       SqlDdl.dmlBranch(tCat) match {
-        case Some(bn) => tCat.store().mergeOnBranch(target, bn, sourceKeys,
-          targetKeyCols, replaceFn, rewriteAll = arms.bySource.nonEmpty)
+        case Some(bn) => tCat.store().merge(target, sourceKeys, targetKeyCols,
+          replaceFn, rewriteAll = arms.bySource.nonEmpty, branch = Some(bn))
         case None if tCat.store().morMergeMode(target) =>
           tCat.morMerge(target, sourceKeys, targetKeyCols,
             morParts, rewriteAll = arms.bySource.nonEmpty)

@@ -457,22 +457,19 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   /** Drop a branch; its staged files become vacuum-reclaimable debris. */
   def dropBranch(table: String, name: String): Unit =
     SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
-      val hit = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"no branch '$name' on $table"))
-      bs - hit
+      bs - branchKey(bs, table, name)
     }
 
   /** Append to a branch: the normal distributed write + promote, with
     * the commit recorded on the branch chain instead of the log — main
-    * readers never see it. Append-only by design: row-level ops on a
-    * branch would need merge semantics fast-forward cannot publish. */
+    * readers never see it. Row-level writes take the branch through
+    * [[deleteWhere]], [[updateWhere]] and [[merge]]. */
   def appendToBranch(table: String, df: DataFrame, name: String,
       timestampMs: Long = System.currentTimeMillis()): Unit = {
     val moved = writeStaged(table, df)
     val n = moved.map(_.records).sum
     SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
-      val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"no branch '$name' on $table"))
+      val key = branchKey(bs, table, name)
       val b = bs(key)
       bs + (key -> b.copy(entries = b.entries :+
         WapEntry(s"$key-${b.entries.size}", timestampMs, moved, n)))
@@ -488,10 +485,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   private def branchNamed(table: String, name: String): (String, Branch) = {
     val bs = branches(table)
-    val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-      throw new IllegalArgumentException(s"no branch '$name' on $table"))
+    val key = branchKey(bs, table, name)
     (key, bs(key))
   }
+
+  /** The stored spelling of branch `name` (names match case-blind). */
+  private def branchKey(bs: Map[String, Branch], table: String,
+      name: String): String =
+    bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
+      throw new IllegalArgumentException(s"no branch '$name' on $table"))
 
   /** A branch's CURRENT file set — fork-point files folded through the
     * entry chain. Pure log/sidecar metadata, no data I/O. */
@@ -503,107 +505,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     b.entries.foldLeft(base) { (files, e) =>
       val rm = e.removedPaths.toSet
       files.filterNot(f => rm(f.path)) ++ e.files
-    }
-  }
-
-  // ---- branch-scoped row-level DML (Iceberg's branch writes: the WAP
-  // story for backfills — UPDATE/DELETE/MERGE staged invisibly on the
-  // branch, validated, then fast-forwarded onto main as real COW
-  // commits). Each op mirrors its main-chain twin exactly, except the
-  // base is the BRANCH's file set and the result is recorded as a
-  // branch entry (added files + removed paths + net row delta) instead
-  // of a log commit. ------------------------------------------------
-
-  /** Branch-scoped [[deleteWhere]]. */
-  def deleteOnBranch(table: String, name: String, predicate: Column,
-      timestampMs: Long = System.currentTimeMillis()): Unit =
-    withCowRetry() {
-      val (entriesAtPlan, cur) = branchCowBase(table, name)
-      val (matched, _) = matchedByPredicate(table, cur, predicate)
-      val replacement =
-        if (matched.isEmpty) None
-        else Some(readFileList(table, matched)
-          .filter(not(coalesce(predicate, lit(false)))))
-      branchCowRecord(table, name, "delete", matched, replacement,
-        entriesAtPlan, timestampMs)
-    }
-
-  /** Branch-scoped [[updateWhere]]. */
-  def updateOnBranch(table: String, name: String,
-      assignments: Seq[(String, Column)], cond: Option[Column],
-      timestampMs: Long = System.currentTimeMillis()): Unit = {
-    val sch = schema(table)
-    assignments.foreach { case (n, _) =>
-      require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
-        s"unknown column '$n' in UPDATE $table")
-    }
-    withCowRetry() {
-      val (entriesAtPlan, cur) = branchCowBase(table, name)
-      val (matched, _) = cond match {
-        case Some(p) => matchedByPredicate(table, cur, p)
-        case None    => (cur, Seq.empty[DataFile])
-      }
-      val replacement =
-        if (matched.isEmpty) None
-        else {
-          val matchedPred = coalesce(cond.getOrElse(lit(true)), lit(false))
-          val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
-          Some(readFileList(table, matched).select(sch.fields.toIndexedSeq.map { f =>
-            byName.get(f.name.toLowerCase) match {
-              case Some(value) =>
-                when(matchedPred, value.cast(f.dataType))
-                  .otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*))
-        }
-      branchCowRecord(table, name, "update", matched, replacement,
-        entriesAtPlan, timestampMs)
-    }
-  }
-
-  /** Branch-scoped [[merge]]. */
-  def mergeOnBranch(table: String, name: String, sourceKeys: DataFrame,
-      keyCols: Seq[String], replace: DataFrame => DataFrame,
-      timestampMs: Long = System.currentTimeMillis(),
-      rewriteAll: Boolean = false): Unit =
-    withCowRetry() {
-      val (entriesAtPlan, cur) = branchCowBase(table, name)
-      val (matched, _) =
-        if (rewriteAll) (cur, Seq.empty[DataFile])
-        else matchedByKeys(table, cur, sourceKeys, keyCols)
-      val replacement = replace(readFileList(table, matched))
-      branchCowRecord(table, name, "merge", matched, Some(replacement),
-        entriesAtPlan, timestampMs)
-    }
-
-  private def branchCowBase(table: String, name: String): (Int, Seq[DataFile]) = {
-    val (_, b) = branchNamed(table, name)
-    (b.entries.size, branchFileSet(table, b))
-  }
-
-  /** Stage the rewrite, then record it on the branch chain under the
-    * sidecar lock. OPTIMISTIC like [[cowCommit]]: the matched/carried
-    * split was planned against a branch state read outside the lock —
-    * if the branch gained entries since, throw the conflict and let the
-    * caller's bounded retry recompute. */
-  private def branchCowRecord(table: String, name: String, operation: String,
-      matched: Seq[DataFile], replacement: Option[DataFrame],
-      entriesAtPlan: Int, timestampMs: Long): Unit = {
-    val newFiles = replacement.map(writeStaged(table, _)).getOrElse(Seq.empty)
-    val removedRows = TableStore.inParallel(matched)(recordsOf(table, _)).sum
-    val delta = newFiles.map(_.records).sum - removedRows
-    SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
-      val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"no branch '$name' on $table"))
-      val b = bs(key)
-      if (b.entries.size != entriesAtPlan)
-        throw new SnapshotLog.CommitConflictException(
-          s"branch '$name' of $table advanced while a '$operation' was " +
-            "being prepared — recompute and retry")
-      bs + (key -> b.copy(entries = b.entries :+ WapEntry(
-        s"$key-${b.entries.size}", timestampMs, newFiles, delta,
-        removedPaths = matched.map(_.path), operation = operation)))
     }
   }
 
@@ -621,10 +522,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * publish point before resuming a stream. */
   def fastForward(table: String, name: String,
       timestampMs: Long = System.currentTimeMillis()): Seq[Snapshot] = {
-    val bs = branches(table)
-    val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-      throw new IllegalArgumentException(s"no branch '$name' on $table"))
-    SnapshotLog.fastForward(fs, tableDir(table), key, timestampMs,
+    SnapshotLog.fastForward(fs, tableDir(table), branchNamed(table, name)._1,
+      timestampMs,
       schemaVersionOf = () => commitSchemaVersion(table))
   }
 
@@ -2060,28 +1959,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   // File-granular copy-on-write (row-level DELETE / UPDATE / upsert)
   // -------------------------------------------------------------------
 
-  /** Split the current files into (matched = must rewrite, carried = keep
-    * by reference) for a row predicate. Three pruning stages, cheapest
-    * first: partition values (log only) → footer min/max (driver metadata
-    * reads) → exact distributed probe (`input_file_name` over the
+  /** The files of `baseFiles` holding a row the predicate matches (the
+    * must-rewrite set; the rest carry by reference). Three pruning stages,
+    * cheapest first: partition values (log only) → footer min/max (driver
+    * metadata reads) → exact distributed probe (`input_file_name` over the
     * predicate-pushed scan, so only row groups that might match are read).
     */
   private def matchedByPredicate(table: String, baseFiles: Seq[DataFile],
-      predicate: Column): (Seq[DataFile], Seq[DataFile]) = {
-    val surviving = pruneList(table, baseFiles, predicate) // stage 1: partition prune
-    val partCarried = baseFiles.diff(surviving)
-    val pe = analyzedPredicate(table, predicate)
-    // footer reads are independent driver metadata ops: parallelize.
-    // Skip a file's footer only when every column the predicate touches
-    // has LOGGED stats (then stage 1 already applied exactly these
-    // bounds); a referenced column beyond the stats cap or with dropped
-    // string bounds still gets the documented footer fallback.
-    val predCols = pe.references.map(_.name.toLowerCase).toSet
-    val keep = TableStore.inParallel(surviving)(f =>
-      predCols.subsetOf(f.stats.keySet.map(_.toLowerCase)) ||
-        Pruning.mightMatch(pe, Pruning.footerRanges(fs, absPath(table, f.path))))
-    val (kept, dropped) = surviving.zip(keep).partition(_._2)
-    val (statCand, statCarried) = (kept.map(_._1), dropped.map(_._1))
+      predicate: Column): Seq[DataFile] = {
+    val statCand = metadataCandidates(table, baseFiles, predicate)
     val matchedNames: Set[String] =
       if (statCand.isEmpty) Set.empty
       // the probe must read through rename reconciliation
@@ -2095,14 +1981,27 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         .filter(predicate)
         .select(input_file_name()).distinct()
         .collect().map(r => TableStore.fileName(r.getString(0))).toSet
-    val (matched, unmatched) =
-      statCand.partition(f => matchedNames(TableStore.fileName(f.path)))
-    (matched, partCarried ++ statCarried ++ unmatched)
+    statCand.filter(f => matchedNames(TableStore.fileName(f.path)))
   }
 
-  /** Same split for a key-based write (upsert/MERGE): footer-prune with
-    * the key-space bounds of `updates` (one tiny agg job), then probe
-    * candidates with a distributed semi-join on the keys. */
+  /** The files `predicate` might match by metadata alone: partition
+    * values and logged stats (no I/O), then footer min/max. Footer reads
+    * are independent driver metadata ops: parallelize. Skip a file's
+    * footer only when every column the predicate touches has LOGGED
+    * stats (then the log prune already applied exactly these bounds); a
+    * referenced column beyond the stats cap or with dropped string
+    * bounds still gets the documented footer fallback. */
+  private def metadataCandidates(table: String, files: Seq[DataFile],
+      predicate: Column): Seq[DataFile] = {
+    val surviving = pruneList(table, files, predicate)
+    val pe = analyzedPredicate(table, predicate)
+    val predCols = pe.references.map(_.name.toLowerCase).toSet
+    val keep = TableStore.inParallel(surviving)(f =>
+      predCols.subsetOf(f.stats.keySet.map(_.toLowerCase)) ||
+        Pruning.mightMatch(pe, Pruning.footerRanges(fs, absPath(table, f.path))))
+    surviving.zip(keep).collect { case (f, true) => f }
+  }
+
   /** Needle tier of the key-based matched-file probe: when the distinct
     * key set is metadata-sized (same cap discipline as
     * [[graft.catalog.GraftCatalog.joinPruned]]'s `maxKeys`), re-prune
@@ -2129,11 +2028,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       }
     }
 
-  private def matchedByKeys(table: String, baseFiles: Seq[DataFile],
-      updates: DataFrame,
-      keyCols: Seq[String]): (Seq[DataFile], Seq[DataFile]) = {
-    val files = baseFiles
-    if (files.isEmpty) return (Seq.empty, Seq.empty)
+  /** Same matched-file search for a key-based write (upsert/MERGE):
+    * footer-prune with the key-space bounds of `updates` (one tiny agg
+    * job), then probe candidates with a distributed semi-join on the
+    * keys. */
+  private def matchedByKeys(table: String, files: Seq[DataFile],
+      updates: DataFrame, keyCols: Seq[String]): Seq[DataFile] = {
+    if (files.isEmpty) return Seq.empty
     val keys = updates.select(keyCols.map(col): _*).distinct()
     val aggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
     val bounds = keys.agg(aggs.head, aggs.tail: _*).head()
@@ -2142,15 +2043,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       if (lo == null || hi == null) lit(true)
       else col(k) >= lit(lo) && col(k) <= lit(hi)
     }.reduce(_ && _)
-    val surviving = pruneList(table, files, rangePred)
-    val partCarried = files.diff(surviving)
-    val pe = analyzedPredicate(table, rangePred)
-    val rangeCols = pe.references.map(_.name.toLowerCase).toSet
-    val keep = TableStore.inParallel(surviving)(f =>
-      rangeCols.subsetOf(f.stats.keySet.map(_.toLowerCase)) ||
-        Pruning.mightMatch(pe, Pruning.footerRanges(fs, absPath(table, f.path))))
-    val (kept, dropped) = surviving.zip(keep).partition(_._2)
-    val (statCand, statCarried) = (kept.map(_._1), dropped.map(_._1))
+    val statCand = metadataCandidates(table, files, rangePred)
     val keyPruned = keyProbeCandidates(table, statCand, keys, keyCols)
     val matchedNames: Set[String] =
       if (keyPruned.isEmpty) Set.empty
@@ -2162,35 +2055,117 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         .join(keys, keyCols, "left_semi")
         .select(TableStore.FileCol).distinct()
         .collect().map(r => TableStore.fileName(r.getString(0))).toSet
-    val (matched, unmatched) =
-      statCand.partition(f => matchedNames(TableStore.fileName(f.path)))
-    (matched, partCarried ++ statCarried ++ unmatched)
+    statCand.filter(f => matchedNames(TableStore.fileName(f.path)))
   }
 
-  /** Commit `carried` by reference plus the rewritten `replacement` rows
-    * as fresh files — the file-granular COW commit. OPTIMISTIC: the
-    * matched/carried split was computed outside the commit lock against
-    * `baseId`; if another writer advanced the table since, the commit
-    * throws [[SnapshotLog.CommitConflictException]] instead of silently
-    * dropping that writer's changes (Iceberg's conflict contract). The
-    * public row-level ops recompute and retry a bounded number of times. */
-  private def cowCommit(table: String, operation: String,
-      carried: Seq[DataFile], matched: Seq[DataFile],
-      replacement: Option[DataFrame], timestampMs: Long,
-      baseId: Long, extraSummary: Map[String, String] = Map.empty): Snapshot = {
-    val newFiles = replacement.map(writeStaged(table, _)).getOrElse(Seq.empty)
-    val total = TableStore.inParallel(carried)(recordsOf(table, _)).sum +
-      newFiles.map(_.records).sum
-    val cdcSummary = writeChangeFiles(table, matched, newFiles, extraSummary)
-    SnapshotLog.commit(fs, tableDir(table), operation, carried ++ newFiles,
-      total, timestampMs, replaceAll = true,
-      summary = Map(
-        "rewritten-files" -> matched.size.toString,
-        "carried-files" -> carried.size.toString,
-        "added-files" -> newFiles.size.toString) ++ extraSummary ++ cdcSummary,
-      expectedLastId = Some(baseId),
-      schemaVersionOf = () => commitSchemaVersion(table))
+  /** What one row-level write changes (Iceberg's RowDelta): the base
+    * entries it `removed` and the entries it `added` — rewritten files,
+    * dirtied files re-entered with a new delete ref, appended rows. */
+  private case class RowDelta(operation: String, removed: Seq[DataFile],
+      added: Seq[DataFile], summary: Map[String, String])
+
+  /** The state a row-level write plans against: main's current snapshot
+    * (`id` = its snapshot id, 0 = empty table) or a branch's file set
+    * (`id` = the branch's entry count). */
+  private case class RowBase(id: Long, files: Seq[DataFile])
+
+  /** The one commit under every row-level write. On main: a replace
+    * commit of `base`'s files minus `removed` plus `added`. On a branch:
+    * a branch entry that [[fastForward]] replays as that commit; the
+    * returned snapshot is not in the log (id -1) and holds the entry's
+    * added files and net row delta. OPTIMISTIC: if another writer
+    * advanced main (or the branch) past `base`, this throws
+    * [[SnapshotLog.CommitConflictException]] instead of silently dropping
+    * that writer's change, and [[writeDelta]] re-plans. */
+  private def commitDelta(table: String, base: RowBase, delta: RowDelta,
+      timestampMs: Long, branch: Option[String] = None): Snapshot =
+    branch match {
+      case None =>
+        val gone = delta.removed.map(_.path).toSet
+        val files = base.files.filterNot(f => gone(f.path)) ++ delta.added
+        SnapshotLog.commit(fs, tableDir(table), delta.operation, files,
+          recordTotal(table, files), timestampMs, replaceAll = true,
+          summary = delta.summary, expectedLastId = Some(base.id),
+          schemaVersionOf = () => commitSchemaVersion(table))
+      case Some(name) =>
+        val net = recordTotal(table, delta.added) -
+          recordTotal(table, delta.removed)
+        SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
+          val key = branchKey(bs, table, name)
+          val b = bs(key)
+          if (b.entries.size != base.id)
+            throw new SnapshotLog.CommitConflictException(
+              s"branch '$name' of $table advanced while a " +
+                s"'${delta.operation}' was being prepared — recompute and retry")
+          bs + (key -> b.copy(entries = b.entries :+ WapEntry(
+            s"$key-${b.entries.size}", timestampMs, delta.added, net,
+            removedPaths = delta.removed.map(_.path),
+            operation = delta.operation)))
+        }
+        Snapshot(-1L, timestampMs, delta.operation, delta.added, net,
+          delta.summary)
+    }
+
+  /** A row-level write with a bounded retry on commit conflict: each
+    * attempt re-reads the base and re-plans its delta against it. */
+  private def writeDelta(table: String, timestampMs: Long,
+      branch: Option[String] = None, attempts: Int = 3)(
+      plan: RowBase => RowDelta): Snapshot =
+    try {
+      val base = branch match {
+        case None =>
+          val snap = SnapshotLog.resolve(fs, tableDir(table), None)
+          RowBase(snap.map(_.id).getOrElse(0L),
+            snap.map(_.files).getOrElse(Seq.empty))
+        case Some(name) =>
+          val b = branchNamed(table, name)._2
+          RowBase(b.entries.size, branchFileSet(table, b))
+      }
+      commitDelta(table, base, plan(base), timestampMs, branch)
+    } catch {
+      case _: SnapshotLog.CommitConflictException if attempts > 1 =>
+        writeDelta(table, timestampMs, branch, attempts - 1)(plan)
+    }
+
+  /** Live record total of `files`: the logged counts, plus one footer
+    * probe per entry logged before counts were (`records < 0`). */
+  private def recordTotal(table: String, files: Seq[DataFile]): Long = {
+    val (known, unknown) = files.partition(_.records >= 0)
+    known.iterator.map(_.records).sum +
+      TableStore.inParallel(unknown)(recordsOf(table, _)).sum
   }
+
+  /** File-granular copy-on-write: `plan` picks the base files to rewrite
+    * and their replacement rows; every other file carries by reference. */
+  private def cowRewrite(table: String, operation: String, timestampMs: Long,
+      branch: Option[String] = None,
+      extraSummary: Map[String, String] = Map.empty)(
+      plan: Seq[DataFile] => (Seq[DataFile], Option[DataFrame])): Snapshot =
+    writeDelta(table, timestampMs, branch) { base =>
+      val (matched, replacement) = plan(base.files)
+      rewriteDelta(table, operation, base, matched, replacement,
+        branch.isDefined, extraSummary)
+    }
+
+  /** Stage `replacement` as fresh files in place of `matched` and store
+    * the change files — except for a branch entry, which fast-forward
+    * publishes as metadata only. */
+  private def rewriteDelta(table: String, operation: String, base: RowBase,
+      matched: Seq[DataFile], replacement: Option[DataFrame],
+      onBranch: Boolean, extraSummary: Map[String, String]): RowDelta = {
+    val newFiles = replacement.map(writeStaged(table, _)).getOrElse(Seq.empty)
+    val cdcSummary =
+      if (onBranch) Map.empty[String, String]
+      else writeChangeFiles(table, matched, newFiles, extraSummary)
+    RowDelta(operation, matched, newFiles, Map(
+      "rewritten-files" -> matched.size.toString,
+      "carried-files" -> (base.files.size - matched.size).toString,
+      "added-files" -> newFiles.size.toString) ++ extraSummary ++ cdcSummary)
+  }
+
+  /** Plan-evidence seam for [[changeDiff]] (measurement tooling only). */
+  private[graft] def changeDiffFrame(removed: DataFrame,
+      added: DataFrame): DataFrame = changeDiff(removed, added)
 
   /** BOTH directions of the multiset diff between `removed` and `added`
     * in ONE aggregation, tagged [[TableStore.ChangeTypeCol]] ('delete' =
@@ -2204,10 +2179,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * exchange reuse dedupes). Multiset semantics identical: group-by
     * equality is exceptAll's own NULL-safe, float-normalized equality,
     * and ReplicateRows is the generator exceptAll itself plans. */
-  /** Plan-evidence seam for [[changeDiff]] (measurement tooling only). */
-  private[graft] def changeDiffFrame(removed: DataFrame,
-      added: DataFrame): DataFrame = changeDiff(removed, added)
-
   private def changeDiff(removed: DataFrame, added: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSqlShim
     val cols = removed.columns.toSeq
@@ -2264,14 +2235,41 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val addedDf = readFileListAs(table, newFiles, sch)
     // one fused count-and-replicate for BOTH diff directions (see
     // changeDiff) — the former exceptAll pair aggregated twice
-    val changes = changeDiff(removedDf, addedDf)
-    // bound the change-file count to the commit's own footprint: the
-    // exceptAll shuffle would otherwise emit one (usually tiny) file
-    // per shuffle partition on EVERY commit — the small-files problem,
-    // self-inflicted, in the metadata channel
-    val nOut = math.max(1, math.min(matched.size + newFiles.size, 16))
+    storeChanges(table, changeDiff(removedDf, addedDf),
+      matched.size + newFiles.size)
+  }
+
+  /** The change files of a merge-on-read or equality commit, which knows
+    * its row-level diff exactly: the `deleted` rows plus every row of the
+    * freshly `inserted` files. Nothing is stored when the feed is off or
+    * the commit changed no row. */
+  private def storeDeltaChanges(table: String, anyDeleted: Boolean,
+      deleted: => DataFrame, inserted: Seq[DataFile],
+      touched: Int): Map[String, String] =
+    if (!changeFeedEnabled(table) || (!anyDeleted && inserted.isEmpty))
+      Map.empty
+    else {
+      val dels = deleted.withColumn(TableStore.ChangeTypeCol, lit("delete"))
+      val changes = inserted match {
+        case Seq() => dels
+        case nf => dels.unionByName(
+          readFileListAs(table, nf, schema(table))
+            .withColumn(TableStore.ChangeTypeCol, lit("insert")))
+      }
+      storeChanges(table, changes, touched + inserted.size)
+    }
+
+  /** Write `changes` as one commit's change files under `cdc/<uuid>/` and
+    * return the summary entry naming the directory. The file count is
+    * bounded by the commit's own footprint (`touched` files, at most 16):
+    * the diff's shuffle would otherwise emit one (usually tiny) file per
+    * shuffle partition on EVERY commit — the small-files problem,
+    * self-inflicted, in the metadata channel. */
+  private def storeChanges(table: String, changes: DataFrame,
+      touched: Int): Map[String, String] = {
     val rel = s"cdc/${UUID.randomUUID()}"
-    changes.coalesce(nOut).write.mode(SaveMode.Overwrite)
+    changes.coalesce(math.max(1, math.min(touched, 16)))
+      .write.mode(SaveMode.Overwrite)
       .parquet(new HPath(tableDir(table), rel).toString)
     Map(TableStore.CdcDirKey -> rel)
   }
@@ -2388,13 +2386,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     else if (fs.exists(p)) fs.delete(p, false)
   }
 
-  /** Current snapshot (hydrated) + its id, the base a COW op computes
-    * against; id 0 = empty table. */
-  private def cowBase(table: String): (Long, Seq[DataFile]) = {
-    val snap = SnapshotLog.resolve(fs, tableDir(table), None)
-    (snap.map(_.id).getOrElse(0L), snap.map(_.files).getOrElse(Seq.empty))
-  }
-
   // -------------------------------------------------------------------
   // Bucketed tables (CLUSTERED BY … INTO n BUCKETS)
   // -------------------------------------------------------------------
@@ -2415,32 +2406,26 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       case sp if sp.transform == "bucket" => (sp.column, sp.param.get)
     }
 
-  /** Retry a COW op on commit conflict: each attempt recomputes its
-    * matched/carried split from the then-current snapshot. */
-  private def withCowRetry[T](attempts: Int = 3)(op: => T): T =
-    try op catch {
-      case _: SnapshotLog.CommitConflictException if attempts > 1 =>
-        withCowRetry(attempts - 1)(op)
-    }
-
   /** Copy-on-write row deletion: rewrite ONLY files containing matching
     * rows, dropping those rows; carry every other file by reference.
     * SQL DELETE removes only rows where the predicate is TRUE — a NULL
     * predicate (e.g. `balance = 0` on a NULL balance) must keep the row,
-    * so the kept-set filter coalesces NULL to false before negating. */
+    * so the kept-set filter coalesces NULL to false before negating.
+    *
+    * `branch` (also on [[updateWhere]] and [[merge]]) stages the write
+    * on that branch for a later fast-forward (Iceberg's branch writes),
+    * always copy-on-write: see [[commitDelta]]. */
   def deleteWhere(table: String, predicate: Column,
-      timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    if (morMode(table, TableStore.DeleteModeProp))
+      timestampMs: Long = System.currentTimeMillis(),
+      branch: Option[String] = None): Snapshot =
+    if (branch.isEmpty && morMode(table, TableStore.DeleteModeProp))
       morDeleteWhere(table, predicate, timestampMs)
-    else withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = matchedByPredicate(table, baseFiles, predicate)
-      val replacement =
+    else cowRewrite(table, "delete", timestampMs, branch) { files =>
+      val matched = matchedByPredicate(table, files, predicate)
+      (matched,
         if (matched.isEmpty) None
         else Some(readFileList(table, matched)
-          .filter(not(coalesce(predicate, lit(false)))))
-      cowCommit(table, "delete", carried, matched, replacement,
-        timestampMs, baseId)
+          .filter(not(coalesce(predicate, lit(false))))))
     }
 
   /** Copy-on-write UPDATE: rewrite only files containing matched rows.
@@ -2449,36 +2434,39 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * the matched files' rows gives exactly that. */
   def updateWhere(table: String, assignments: Seq[(String, Column)],
       cond: Option[Column],
-      timestampMs: Long = System.currentTimeMillis()): Snapshot = {
+      timestampMs: Long = System.currentTimeMillis(),
+      branch: Option[String] = None): Snapshot = {
     val sch = schema(table)
     assignments.foreach { case (n, _) =>
       require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
         s"unknown column '$n' in UPDATE $table")
     }
-    if (morMode(table, TableStore.UpdateModeProp))
+    if (branch.isEmpty && morMode(table, TableStore.UpdateModeProp))
       return morUpdateWhere(table, assignments, cond, timestampMs)
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = cond match {
-        case Some(p) => matchedByPredicate(table, baseFiles, p)
-        case None    => (baseFiles, Seq.empty[DataFile])
-      }
-      val replacement =
+    cowRewrite(table, "update", timestampMs, branch) { files =>
+      val matched = cond.fold(files)(matchedByPredicate(table, files, _))
+      val where = coalesce(cond.getOrElse(lit(true)), lit(false))
+      (matched,
         if (matched.isEmpty) None
-        else {
-          val matchedPred = coalesce(cond.getOrElse(lit(true)), lit(false))
-          val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
-          Some(readFileList(table, matched).select(sch.fields.toIndexedSeq.map { f =>
-            byName.get(f.name.toLowerCase) match {
-              case Some(value) =>
-                when(matchedPred, value.cast(f.dataType))
-                  .otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*))
-        }
-      cowCommit(table, "update", carried, matched, replacement,
-        timestampMs, baseId)
+        else Some(readFileList(table, matched)
+          .select(setProjection(sch, assignments, Some(where)): _*)))
+    }
+  }
+
+  /** UPDATE's SET projection over the table schema, each assigned value
+    * cast to its column's type: applied only to rows where `where` holds
+    * when given (a COW rewrite carries a whole file's rows), to every row
+    * otherwise (a MOR update projects the matched rows alone). */
+  private def setProjection(sch: StructType,
+      assignments: Seq[(String, Column)], where: Option[Column]): Seq[Column] = {
+    val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
+    sch.fields.toIndexedSeq.map { f =>
+      byName.get(f.name.toLowerCase) match {
+        case Some(value) =>
+          val v = value.cast(f.dataType)
+          where.fold(v)(when(_, v).otherwise(col(f.name))).as(f.name)
+        case None => col(f.name)
+      }
     }
   }
 
@@ -2516,13 +2504,10 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * (their bytes stay for time travel until expire+vacuum). */
   def morDeleteWhere(table: String, predicate: Column,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = matchedByPredicate(table, baseFiles, predicate)
-      morCommit(table, "delete", baseId, matched, carried,
-        doomed = readWithPos(table, matched)
-          .filter(coalesce(predicate, lit(false))),
-        insertRows = None, timestampMs)
+    morWrite(table, "delete", timestampMs) { files =>
+      val matched = matchedByPredicate(table, files, predicate)
+      (matched, readWithPos(table, matched)
+        .filter(coalesce(predicate, lit(false))), None)
     }
 
   /** Merge-on-read UPDATE: the matched rows' positions go into a delete
@@ -2534,24 +2519,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       cond: Option[Column],
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
     val sch = schema(table)
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = cond match {
-        case Some(p) => matchedByPredicate(table, baseFiles, p)
-        case None    => (baseFiles, Seq.empty[DataFile])
-      }
+    morWrite(table, "update", timestampMs) { files =>
+      val matched = cond.fold(files)(matchedByPredicate(table, files, _))
       val doomed = readWithPos(table, matched)
         .filter(coalesce(cond.getOrElse(lit(true)), lit(false)))
-      val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
-      val updatedRows = doomed.select(sch.fields.toIndexedSeq.map { f =>
-        byName.get(f.name.toLowerCase) match {
-          case Some(value) => value.cast(f.dataType).as(f.name)
-          case None        => col(f.name)
-        }
-      }: _*)
-      morCommit(table, "update", baseId, matched, carried, doomed,
-        insertRows = if (matched.isEmpty) None else Some(updatedRows),
-        timestampMs)
+      (matched, doomed,
+        if (matched.isEmpty) None
+        else Some(doomed.select(setProjection(sch, assignments, None): _*)))
     }
   }
 
@@ -2572,104 +2546,94 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       doomedAndPost: DataFrame => (DataFrame, DataFrame),
       timestampMs: Long = System.currentTimeMillis(),
       rewriteAll: Boolean = false): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) =
-        if (rewriteAll) (baseFiles, Seq.empty[DataFile])
-        else matchedByKeys(table, baseFiles, sourceKeys, keyCols)
+    morWrite(table, "merge", timestampMs) { files =>
+      val matched =
+        if (rewriteAll) files
+        else matchedByKeys(table, files, sourceKeys, keyCols)
       val (doomed, post) = doomedAndPost(readWithPos(table, matched))
-      morCommit(table, "merge", baseId, matched, carried, doomed,
-        insertRows = Some(post), timestampMs)
+      (matched, doomed, Some(post))
     }
 
-  /** Shared MOR commit: write `doomed`'s positions as one delete-file
-    * directory, re-enter the matched files with reduced live counts and
-    * the new ref, stage `insertRows` (UPDATE's post-images) as ordinary
-    * data files, serve the change feed, and commit atomically against
-    * `baseId`. All driver-side collects are per-matched-file counts —
-    * metadata-sized by construction. */
-  private def morCommit(table: String, operation: String, baseId: Long,
-      matched: Seq[DataFile], carried: Seq[DataFile], doomed: DataFrame,
-      insertRows: Option[DataFrame], timestampMs: Long): Snapshot = {
-    val dir = tableDir(table)
-    val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
-    val abs = new HPath(dir, rel).toString
-    val counts: Map[String, Long] =
-      if (matched.isEmpty) Map.empty
-      else {
-        doomed.select(
+  /** Shared MOR write: `plan` picks the matched base files, the `doomed`
+    * rows among them (positions attached) and the rows to append
+    * (UPDATE's post-images). The doomed positions go into one delete-file
+    * directory, the matched files re-enter with reduced live counts and
+    * the new ref, the appended rows stage as ordinary data files, the
+    * change feed is served, and the commit lands atomically against the
+    * planned base (each retry re-plans). All driver-side collects are
+    * per-matched-file counts — metadata-sized by construction. */
+  private def morWrite(table: String, operation: String, timestampMs: Long)(
+      plan: Seq[DataFile] => (Seq[DataFile], DataFrame, Option[DataFrame]))
+      : Snapshot =
+    writeDelta(table, timestampMs) { base =>
+      val (matched, doomed, insertRows) = plan(base.files)
+      val (rel, counts) =
+        if (matched.isEmpty) ("", Map.empty[String, Long])
+        else writePositionDeletes(table, doomed.select(
           col(TableStore.MorFileCol).as(TableStore.DeleteFileField),
-          col(TableStore.MorPosCol).as(TableStore.DeletePosField))
-          .coalesce(math.max(1, math.min(matched.size, 8)))
-          .write.mode(SaveMode.Overwrite).parquet(abs)
-        // per-file delete counts from the WRITTEN file — the committed
-        // refs must describe exactly the positions on disk
-        spark.read.parquet(abs).groupBy(col(TableStore.DeleteFileField))
-          .count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-    val totalDeleted = counts.values.sum
-    if (totalDeleted == 0 && fs.exists(new HPath(dir, rel)))
-      fs.delete(new HPath(dir, rel), true) // nothing matched: no ref to keep
-    val ref = DeleteRef(rel, 0L) // per-file records patched below
-    val updatedEntries = matched.flatMap { f =>
+          col(TableStore.MorPosCol).as(TableStore.DeletePosField)),
+          matched.size)
+      val totalDeleted = counts.values.sum
+      val updatedEntries = reenterLive(table, matched, counts, rel)
+      val newFiles = insertRows
+        .map(rows => writeStaged(table,
+          rows.drop(TableStore.MorFileCol, TableStore.MorPosCol)))
+        .getOrElse(Seq.empty)
+        // an all-arms-delete MERGE stages zero rows — drop the empty part
+        // files rather than logging them (vacuum reclaims the bytes)
+        .filter(_.records != 0L)
+      // change feed: MOR commits always know their exact row-level diff —
+      // store it when the feed is on (cost ∝ changes); the diff path can
+      // also recover it later from the delete files ([[readChanges]])
+      val cdcSummary = storeDeltaChanges(table, totalDeleted > 0,
+        doomed.drop(TableStore.MorFileCol, TableStore.MorPosCol),
+        newFiles, matched.size)
+      val morSummary =
+        if (totalDeleted == 0) Map.empty[String, String]
+        else Map(
+          TableStore.MorDeletesKey -> s"""["$rel"]""",
+          "position-deletes" -> totalDeleted.toString)
+      RowDelta(operation, matched, updatedEntries ++ newFiles, Map(
+        "merge-on-read" -> "true",
+        "carried-files" -> (base.files.size - matched.size).toString,
+        "added-files" -> newFiles.size.toString) ++ morSummary ++ cdcSummary)
+    }
+
+  /** Write `positions` (`_file`, `_pos`) as one fresh delete-file
+    * directory, at most one file per touched data file (cap 8), and count
+    * each data file's positions from the WRITTEN files — committed refs
+    * must describe exactly the positions on disk. Returns the directory
+    * (table-relative) and the per-file counts; an empty result leaves no
+    * directory behind. */
+  private def writePositionDeletes(table: String, positions: DataFrame,
+      touched: Int): (String, Map[String, Long]) = {
+    val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
+    val abs = new HPath(tableDir(table), rel)
+    positions.coalesce(math.max(1, math.min(touched, 8)))
+      .write.mode(SaveMode.Overwrite).parquet(abs.toString)
+    val counts = spark.read.parquet(abs.toString)
+      .groupBy(col(TableStore.DeleteFileField)).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (counts.isEmpty) fs.delete(abs, true)
+    (rel, counts)
+  }
+
+  /** Re-enter dirtied `files` after a position-delete write to `rel`: a
+    * file with newly deleted positions gets its live count reduced and
+    * the new ref appended, or leaves the snapshot when no live row is
+    * left (its bytes stay for time travel until expire+vacuum); a file
+    * without new positions (a probe superset) re-enters as it is. */
+  private def reenterLive(table: String, files: Seq[DataFile],
+      counts: Map[String, Long], rel: String): Seq[DataFile] =
+    files.flatMap { f =>
       counts.get(TableStore.fileName(f.path)) match {
-        case None => Some(f) // probe superset: no live row matched
+        case None => Some(f)
         case Some(n) =>
           val live = recordsOf(table, f) - n
-          if (live <= 0) None // fully deleted: out of the snapshot
-          else Some(f.copy(records = live,
-            deletes = f.deletes :+ ref.copy(records = n)))
+          if (live <= 0) None
+          else Some(f.copy(records = live, deletes = f.deletes :+ DeleteRef(rel, n)))
       }
     }
-    val newFiles = insertRows
-      .map(rows => writeStaged(table,
-        rows.drop(TableStore.MorFileCol, TableStore.MorPosCol)))
-      .getOrElse(Seq.empty)
-      // an all-arms-delete MERGE stages zero rows — drop the empty part
-      // files rather than logging them (vacuum reclaims the bytes)
-      .filter(_.records != 0L)
-    // change feed: MOR commits always know their exact row-level diff —
-    // store it when the feed is on (cost ∝ changes); the diff path can
-    // also recover it later from the delete files ([[readChanges]])
-    val cdcSummary =
-      if (!changeFeedEnabled(table) || (totalDeleted == 0 && newFiles.isEmpty))
-        Map.empty[String, String]
-      else {
-        val sch = schema(table)
-        val deleted = doomed
-          .drop(TableStore.MorFileCol, TableStore.MorPosCol)
-          .withColumn(TableStore.ChangeTypeCol, lit("delete"))
-        val changes = newFiles match {
-          case Seq() => deleted
-          case nf => deleted.unionByName(
-            readFileListAs(table, nf, sch)
-              .withColumn(TableStore.ChangeTypeCol, lit("insert")))
-        }
-        val cdcRel = s"cdc/${UUID.randomUUID()}"
-        changes.coalesce(math.max(1, math.min(matched.size + newFiles.size, 16)))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(new HPath(dir, cdcRel).toString)
-        Map(TableStore.CdcDirKey -> cdcRel)
-      }
-    val total = TableStore.inParallel(carried)(recordsOf(table, _)).sum +
-      updatedEntries.map(f => recordsOf(table, f)).sum +
-      newFiles.map(_.records).sum
-    val morSummary =
-      if (totalDeleted == 0) Map.empty[String, String]
-      else Map(
-        TableStore.MorDeletesKey -> s"""["$rel"]""",
-        "position-deletes" -> totalDeleted.toString)
-    SnapshotLog.commit(fs, dir, operation,
-      carried ++ updatedEntries ++ newFiles, total, timestampMs,
-      replaceAll = true,
-      summary = Map(
-        "merge-on-read" -> "true",
-        "carried-files" -> carried.size.toString,
-        "added-files" -> newFiles.size.toString) ++ morSummary ++ cdcSummary,
-      expectedLastId = Some(baseId),
-      schemaVersionOf = () => commitSchemaVersion(table))
-  }
 
   // -------------------------------------------------------------------
   // Equality deletes (Iceberg v2's other delete shape — the one Flink
@@ -2765,7 +2729,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   private def eqCommit(table: String, operation: String, keys0: DataFrame,
       insertRows: Option[DataFrame], timestampMs: Long,
       extraSummary: Map[String, String] = Map.empty): Snapshot =
-    withCowRetry() {
+    writeDelta(table, timestampMs) { base =>
       val sch = schema(table)
       val keyFields: Seq[(String, StructField)] =
         keys0.schema.fieldNames.toSeq.map { n =>
@@ -2775,7 +2739,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         }
       require(keyFields.nonEmpty,
         "equality delete needs at least one key column")
-      val (baseId, baseFiles) = cowBase(table)
       val dir = tableDir(table)
       val rel = s"${TableStore.DeletesDir}/eqdelete-${UUID.randomUUID()}"
       val abs = new HPath(dir, rel).toString
@@ -2799,16 +2762,19 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         else if (keyFields.size == 1 &&
             tupleCount <= TableStore.EqPruneMaxKeys) {
           val vals = spark.read.parquet(abs).collect().map(_.get(0)).toSeq
-          if (vals.contains(null)) baseFiles
-          else pruneList(table, baseFiles,
+          if (vals.contains(null)) base.files
+          else pruneList(table, base.files,
             col(keyFields.head._2.name).isin(vals: _*))
-        } else baseFiles
+        } else base.files
       if (tupleCount == 0) fs.delete(new HPath(dir, rel), true)
       val ref = DeleteRef(rel, tupleCount,
         keyFields.map(_._2.name))
+      // records stay as logged — now an UPPER bound for the attach set
+      // (matched counts are unknowable without the read this write
+      // exists to avoid); SnapshotLog.commit stamps the marker that
+      // makes metadata COUNT decline while any ref is live
       val updatedEntries = attachSet.map(f =>
         f.copy(deletes = f.deletes :+ ref))
-      val carried = baseFiles.diff(attachSet)
       val newFiles = insertRows
         .map(rows => writeStaged(table, rows))
         .getOrElse(Seq.empty)
@@ -2818,49 +2784,20 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       // read (cost ∝ attach-set scan). Feed-less tables keep the pure
       // O(batch) write; the batch table_changes() reader can also
       // recover the diff later from the key file alone.
-      val cdcSummary =
-        if (!changeFeedEnabled(table) ||
-            (tupleCount == 0 && newFiles.isEmpty))
-          Map.empty[String, String]
-        else {
-          val deleted = equalityDeleteJoin(table,
-            readFileListAs(table, attachSet, sch), Seq(ref), sch,
-            "left_semi")
-            .withColumn(TableStore.ChangeTypeCol, lit("delete"))
-          val changes = newFiles match {
-            case Seq() => deleted
-            case nf => deleted.unionByName(
-              readFileListAs(table, nf, sch)
-                .withColumn(TableStore.ChangeTypeCol, lit("insert")))
-          }
-          val cdcRel = s"cdc/${UUID.randomUUID()}"
-          changes.coalesce(math.max(1,
-            math.min(attachSet.size + newFiles.size, 16)))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(new HPath(dir, cdcRel).toString)
-          Map(TableStore.CdcDirKey -> cdcRel)
-        }
-      // records stay as logged — now an UPPER bound for the attach set
-      // (matched counts are unknowable without the read this write
-      // exists to avoid); SnapshotLog.commit stamps the marker that
-      // makes metadata COUNT decline while any ref is live
-      val total = (carried ++ updatedEntries).map(f =>
-        recordsOf(table, f)).sum + newFiles.map(_.records).sum
+      val cdcSummary = storeDeltaChanges(table, tupleCount > 0,
+        equalityDeleteJoin(table, readFileListAs(table, attachSet, sch),
+          Seq(ref), sch, "left_semi"),
+        newFiles, attachSet.size)
       val eqSummary =
         if (tupleCount == 0) Map.empty[String, String]
         else Map(
           TableStore.EqDeletesKey -> s"""["$rel"]""",
           "equality-delete-tuples" -> tupleCount.toString)
-      SnapshotLog.commit(fs, dir, operation,
-        carried ++ updatedEntries ++ newFiles, total, timestampMs,
-        replaceAll = true,
-        summary = Map(
-          "merge-on-read" -> "true",
-          "carried-files" -> carried.size.toString,
-          "added-files" -> newFiles.size.toString) ++ eqSummary ++
-          cdcSummary ++ extraSummary,
-        expectedLastId = Some(baseId),
-        schemaVersionOf = () => commitSchemaVersion(table))
+      RowDelta(operation, attachSet, updatedEntries ++ newFiles, Map(
+        "merge-on-read" -> "true",
+        "carried-files" -> (base.files.size - attachSet.size).toString,
+        "added-files" -> newFiles.size.toString) ++ eqSummary ++
+        cdcSummary ++ extraSummary)
     }
 
   /** Delta-style SHALLOW CLONE: a new table whose first snapshot
@@ -2943,63 +2880,43 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * delete positions (metadata-scale), never ∝ data. */
   def rewritePositionDeleteFiles(table: String,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
+    writeDelta(table, timestampMs) { base =>
       // positional refs only: equality refs hold key tuples, not
       // positions, and stay attached verbatim (OPTIMIZE materializes
       // them; this procedure only binpacks the positional side)
-      val dirty = baseFiles.filter(_.deletes.count(!_.isEquality) >= 2)
+      val dirty = base.files.filter(_.deletes.count(!_.isEquality) >= 2)
       if (dirty.isEmpty)
         // nothing stacked: still commit (maintenance scripts see their
         // CALL in DESCRIBE HISTORY, like a no-op OPTIMIZE)
-        SnapshotLog.commit(fs, tableDir(table), "replace", baseFiles,
-          TableStore.inParallel(baseFiles)(recordsOf(table, _)).sum,
-          timestampMs, replaceAll = true,
-          summary = Map("rewritten-delete-files" -> "0",
+        RowDelta("replace", Seq.empty, Seq.empty,
+          Map("rewritten-delete-files" -> "0",
             "added-delete-files" -> "0",
-            TableStore.RowsPreservedKey -> "true"),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+            TableStore.RowsPreservedKey -> "true"))
       else {
-        val dir = tableDir(table)
         val dirtyNames = dirty.map(f => TableStore.fileName(f.path)).toSet
         val oldRefs = dirty.flatMap(_.deletes.filterNot(_.isEquality))
           .map(_.path).distinct
-        val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
-        val abs = new HPath(dir, rel).toString
-        spark.read.parquet(oldRefs.map(p => absPath(table, p).toString): _*)
-          .select(col(TableStore.DeleteFileField),
-            col(TableStore.DeletePosField))
-          // a delete dir can be shared with single-ref files — keep
-          // only the consolidating files' positions in the new dir
-          .filter(col(TableStore.DeleteFileField)
-            .isin(dirtyNames.toSeq: _*))
-          .distinct()
-          .coalesce(math.max(1, math.min(dirty.size, 8)))
-          .write.mode(SaveMode.Overwrite).parquet(abs)
-        // committed refs must describe exactly the positions on disk
-        val counts = spark.read.parquet(abs)
-          .groupBy(col(TableStore.DeleteFileField)).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val ref = DeleteRef(rel, 0L)
+        val (rel, counts) = writePositionDeletes(table,
+          spark.read.parquet(oldRefs.map(p => absPath(table, p).toString): _*)
+            .select(col(TableStore.DeleteFileField),
+              col(TableStore.DeletePosField))
+            // a delete dir can be shared with single-ref files — keep
+            // only the consolidating files' positions in the new dir
+            .filter(col(TableStore.DeleteFileField)
+              .isin(dirtyNames.toSeq: _*))
+            .distinct(),
+          dirty.size)
         val updated = dirty.map { f =>
           val n = counts.getOrElse(TableStore.fileName(f.path), 0L)
           val eqRefs = f.deletes.filter(_.isEquality) // attached verbatim
           f.copy(deletes =
-            (if (n == 0) Seq.empty else Seq(ref.copy(records = n))) ++ eqRefs)
+            (if (n == 0) Seq.empty else Seq(DeleteRef(rel, n))) ++ eqRefs)
         }
-        val carried = baseFiles.diff(dirty)
-        val total = TableStore.inParallel(carried ++ updated)(
-          recordsOf(table, _)).sum
-        SnapshotLog.commit(fs, dir, "replace", carried ++ updated, total,
-          timestampMs, replaceAll = true,
-          summary = Map(
-            "rewritten-delete-files" -> oldRefs.size.toString,
-            "added-delete-files" -> "1",
-            TableStore.MorDeletesKey -> s"""["$rel"]""",
-            TableStore.RowsPreservedKey -> "true"),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+        RowDelta("replace", dirty, updated, Map(
+          "rewritten-delete-files" -> oldRefs.size.toString,
+          "added-delete-files" -> "1",
+          TableStore.MorDeletesKey -> s"""["$rel"]""",
+          TableStore.RowsPreservedKey -> "true"))
       }
     }
 
@@ -3021,21 +2938,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * dirty files' key columns, never ∝ the table. */
   def convertEqualityDeletes(table: String,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val dirty = baseFiles.filter(_.deletes.exists(_.isEquality))
+    writeDelta(table, timestampMs) { base =>
+      val dirty = base.files.filter(_.deletes.exists(_.isEquality))
       if (dirty.isEmpty)
-        SnapshotLog.commit(fs, tableDir(table), "replace", baseFiles,
-          TableStore.inParallel(baseFiles)(recordsOf(table, _)).sum,
-          timestampMs, replaceAll = true,
-          summary = Map("converted-equality-files" -> "0",
+        RowDelta("replace", Seq.empty, Seq.empty,
+          Map("converted-equality-files" -> "0",
             "added-delete-files" -> "0",
-            TableStore.RowsPreservedKey -> "true"),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+            TableStore.RowsPreservedKey -> "true"))
       else {
         val sch = schema(table)
-        val dir = tableDir(table)
         def positions(applyEq: Boolean): DataFrame =
           readFileListAs(table, dirty, sch, keepPos = true,
             applyEqDeletes = applyEq)
@@ -3045,40 +2956,18 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         // existing positional refs have NOT already discounted, so the
         // live-count arithmetic below holds in every interleaving of
         // positional and equality commits
-        val dead = positions(applyEq = false).except(positions(applyEq = true))
-        val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
-        val abs = new HPath(dir, rel).toString
-        dead.coalesce(math.max(1, math.min(dirty.size, 8)))
-          .write.mode(SaveMode.Overwrite).parquet(abs)
-        val counts = spark.read.parquet(abs)
-          .groupBy(col(TableStore.DeleteFileField)).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (counts.isEmpty) fs.delete(new HPath(dir, rel), true)
-        val ref = DeleteRef(rel, 0L)
-        val updated = dirty.flatMap { f =>
-          val posRefs = f.deletes.filterNot(_.isEquality)
-          counts.get(TableStore.fileName(f.path)) match {
-            case None => Some(f.copy(deletes = posRefs)) // no key matched
-            case Some(n) =>
-              val live = recordsOf(table, f) - n
-              if (live <= 0) None // fully deleted: out of the snapshot
-              else Some(f.copy(records = live,
-                deletes = posRefs :+ ref.copy(records = n)))
-          }
-        }
-        val carried = baseFiles.diff(dirty)
-        val total = TableStore.inParallel(carried ++ updated)(
-          recordsOf(table, _)).sum
-        SnapshotLog.commit(fs, dir, "replace", carried ++ updated, total,
-          timestampMs, replaceAll = true,
-          summary = Map(
-            "converted-equality-files" -> dirty.size.toString,
-            "added-delete-files" -> (if (counts.isEmpty) "0" else "1"),
-            TableStore.RowsPreservedKey -> "true") ++
-            (if (counts.isEmpty) Map.empty[String, String]
-             else Map(TableStore.MorDeletesKey -> s"""["$rel"]""")),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+        val (rel, counts) = writePositionDeletes(table,
+          positions(applyEq = false).except(positions(applyEq = true)),
+          dirty.size)
+        // the key-tuple refs drop out; positional refs stay
+        val updated = reenterLive(table, dirty.map(f =>
+          f.copy(deletes = f.deletes.filterNot(_.isEquality))), counts, rel)
+        RowDelta("replace", dirty, updated, Map(
+          "converted-equality-files" -> dirty.size.toString,
+          "added-delete-files" -> (if (counts.isEmpty) "0" else "1"),
+          TableStore.RowsPreservedKey -> "true") ++
+          (if (counts.isEmpty) Map.empty[String, String]
+           else Map(TableStore.MorDeletesKey -> s"""["$rel"]""")))
       }
     }
 
@@ -3088,17 +2977,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * the old rows for time travel. */
   def upsert(table: String, updates: DataFrame, keyCols: Seq[String],
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = matchedByKeys(table, baseFiles, updates, keyCols)
+    cowRewrite(table, "overwrite", timestampMs) { files =>
+      val matched = matchedByKeys(table, files, updates, keyCols)
       val keys = updates.select(keyCols.map(col): _*).distinct()
       val aligned = updates.select(schema(table).fieldNames.toIndexedSeq.map(col): _*)
-      val kept =
+      (matched, Some(
         if (matched.isEmpty) aligned
         else readFileList(table, matched).join(keys, keyCols, "left_anti")
-          .unionByName(aligned)
-      cowCommit(table, "overwrite", carried, matched, Some(kept),
-        timestampMs, baseId)
+          .unionByName(aligned)))
     }
 
   /** MERGE INTO core: `sourceKeys` drive matched-file detection; the
@@ -3110,15 +2996,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def merge(table: String, sourceKeys: DataFrame, keyCols: Seq[String],
       replace: DataFrame => DataFrame,
       timestampMs: Long = System.currentTimeMillis(),
-      rewriteAll: Boolean = false): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) =
-        if (rewriteAll) (baseFiles, Seq.empty[DataFile])
-        else matchedByKeys(table, baseFiles, sourceKeys, keyCols)
-      val replacement = replace(readFileList(table, matched))
-      cowCommit(table, "merge", carried, matched, Some(replacement),
-        timestampMs, baseId)
+      rewriteAll: Boolean = false,
+      branch: Option[String] = None): Snapshot =
+    cowRewrite(table, "merge", timestampMs, branch) { files =>
+      val matched =
+        if (rewriteAll) files
+        else matchedByKeys(table, files, sourceKeys, keyCols)
+      (matched, Some(replace(readFileList(table, matched))))
     }
 
   /** Read ONLY the named data files (leaf names) of the current
@@ -3143,12 +3027,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       matchedNames: Set[String], replacement: Option[DataFrame],
       expectedLastId: Long,
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
-    val baseFiles = SnapshotLog.resolve(fs, tableDir(table), None)
-      .map(_.files).getOrElse(Seq.empty)
-    val (matched, carried) = baseFiles.partition(f =>
+    val base = RowBase(expectedLastId, dataFilesAsOf(table, None))
+    val matched = base.files.filter(f =>
       matchedNames(TableStore.fileName(f.path)))
-    cowCommit(table, operation, carried, matched,
-      if (matched.isEmpty) None else replacement, timestampMs, expectedLastId)
+    commitDelta(table, base, rewriteDelta(table, operation, base, matched,
+      if (matched.isEmpty) None else replacement, onBranch = false, Map.empty),
+      timestampMs)
   }
 
   /** Schema evolution: append columns to the persisted schema. Existing
@@ -3415,7 +3299,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         .nextOption().getOrElse(""))
       .toSeq.sortBy(_._1)
       .map { case (v, fsOfP) =>
-        (v, fsOfP.size, TableStore.inParallel(fsOfP)(recordsOf(table, _)).sum)
+        (v, fsOfP.size, recordTotal(table, fsOfP))
       }
   }
 
@@ -3570,11 +3454,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     */
   def compact(table: String, targetBytes: Long = TableStore.CompactTargetBytes,
       includeDirty: Boolean = true): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
+    cowRewrite(table, "replace", System.currentTimeMillis(),
+        extraSummary = Map(TableStore.RowsPreservedKey -> "true")) { files =>
       // sizes come from the log when captured at promote time; the fs
       // probe is the pre-upgrade fallback only
-      val sized = baseFiles.map(f => f -> bytesOf(table, f))
+      val sized = files.map(f => f -> bytesOf(table, f))
       // Iceberg's binpack contract: only the UNDER-SIZED tail rewrites,
       // files already at/above target carry by reference — OPTIMIZE on
       // a 100 TB table whose steady state is target-sized touches only
@@ -3584,30 +3468,24 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       // back into clean files (and drops the anti-join from every
       // later read of them). Auto-compaction passes includeDirty=false:
       // materializing deletes stays an explicit decision.
-      val (small, compliant) = sized.partition { case (f, len) =>
+      val small = sized.filter { case (f, len) =>
         if (includeDirty) len < targetBytes || f.deletes.nonEmpty
         else len < targetBytes && f.deletes.isEmpty }
-      val carried = compliant.map(_._1)
-      val replacement =
-        // one small CLEAN file gains nothing rewritten; a single dirty
-        // file still rewrites (the rewrite IS the delete materialization)
-        if (small.size <= 1 && !small.exists(_._1.deletes.nonEmpty)) None
-        else {
-          val bytes = small.map(_._2).sum
-          val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-          // coalesce, not repartition: merging small files needs no
-          // shuffle — at 100 TB a full shuffle to rewrite a table is
-          // the difference between an I/O-bound rewrite and doubling
-          // cluster network traffic
-          Some(readFileList(table, small.map(_._1)).coalesce(n))
-        }
-      // always commits (even a no-op rewrite) so maintenance scripts
-      // see their OPTIMIZE in DESCRIBE HISTORY
-      val kept = if (replacement.isEmpty) carried ++ small.map(_._1) else carried
-      cowCommit(table, "replace", kept,
-        if (replacement.isEmpty) Seq.empty else small.map(_._1),
-        replacement, System.currentTimeMillis(), baseId,
-        extraSummary = Map(TableStore.RowsPreservedKey -> "true"))
+      // one small CLEAN file gains nothing rewritten; a single dirty
+      // file still rewrites (the rewrite IS the delete materialization).
+      // A no-op rewrite still commits, so maintenance scripts see their
+      // OPTIMIZE in DESCRIBE HISTORY
+      if (small.size <= 1 && !small.exists(_._1.deletes.nonEmpty))
+        (Seq.empty, None)
+      else {
+        val bytes = small.map(_._2).sum
+        val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+        // coalesce, not repartition: merging small files needs no
+        // shuffle — at 100 TB a full shuffle to rewrite a table is
+        // the difference between an I/O-bound rewrite and doubling
+        // cluster network traffic
+        (small.map(_._1), Some(readFileList(table, small.map(_._1)).coalesce(n)))
+      }
     }
 
   /** PARTITION-SCOPED compaction (Iceberg's
@@ -3621,20 +3499,16 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def compactWhere(table: String, predicate: Column,
       targetBytes: Long = 128L * 1024 * 1024,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    withCowRetry() {
-      val (baseId, baseFiles) = cowBase(table)
-      val matched = pruneList(table, baseFiles, predicate)
-      val carried = baseFiles.diff(matched)
-      val replacement =
+    cowRewrite(table, "replace", timestampMs,
+        extraSummary = Map(TableStore.RowsPreservedKey -> "true")) { files =>
+      val matched = pruneList(table, files, predicate)
+      (matched,
         if (matched.isEmpty) None
         else {
           val bytes = matched.map(f => bytesOf(table, f)).sum
           val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
           Some(readFileList(table, matched).coalesce(n))
-        }
-      cowCommit(table, "replace", carried, matched, replacement,
-        timestampMs, baseId,
-        extraSummary = Map(TableStore.RowsPreservedKey -> "true"))
+        })
     }
 
   /** One-shot linear sort rewrite (Iceberg's
@@ -3695,7 +3569,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     require(!partitionSpec(table).exists(_.transform == "bucket"),
       s"cannot z-order $table: bucket hash placement owns its layout")
     val names = resolved.map(_.name)
-    val rowCount = dataFilesAsOf(table, None).map(recordsOf(table, _)).sum
+    val rowCount = recordTotal(table, dataFilesAsOf(table, None))
     val totalBytes = dataFilesAsOf(table, None).map(bytesOf(table, _)).sum
     val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val df = read(table)
@@ -4064,7 +3938,9 @@ object TableStore {
   }
 
   /** Driver-side parallel map over independent per-file metadata ops
-    * (footer reads, renames). Bounded pool; exceptions propagate. */
+    * (footer reads, renames). Bounded pool; an exception thrown by `f`
+    * propagates as itself, as it would from the sequential map, not
+    * wrapped in the pool's ExecutionException. */
   private[graft] def inParallel[A, B](xs: Seq[A], parallelism: Int = 16)(
       f: A => B): Seq[B] =
     if (xs.lengthCompare(2) < 0) xs.map(f)
@@ -4074,7 +3950,8 @@ object TableStore {
       try {
         val futures = xs.map(x => pool.submit(
           new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
-        futures.map(_.get())
+        try futures.map(_.get())
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
       } finally pool.shutdown()
     }
 

@@ -3,6 +3,7 @@ package graft.store
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -232,5 +233,79 @@ class TableStoreSpec extends AnyFunSuite {
     assert(got == Seq((1L, 1.5, None)))
     // nothing was staged by the rejected writes: exactly one data file
     assert(st.dataFilesAsOf("tv", None).size == 1)
+  }
+
+  test("inParallel surfaces a worker's exception as itself, not wrapped") {
+    val e = intercept[IllegalArgumentException] {
+      TableStore.inParallel(Seq(1, 2, 3)) { i =>
+        require(i != 2, s"bad item $i"); i
+      }
+    }
+    assert(e.getMessage == "requirement failed: bad item 2")
+  }
+
+  // ---- the row-level commit's conflict contract on the paths the
+  // concurrent COW DELETE test does not reach: a write that lands between
+  // planning and committing makes the commit conflict, the op re-plans
+  // once against the new base, and neither change is lost. Both cases
+  // inject the competing write from inside the op's own callback, so no
+  // threads are involved and the interleaving is exact. ----
+
+  private def rows(st: TableStore, table: String): Seq[(Int, String)] =
+    st.read(table).as[(Int, String)].collect().toSeq.sorted
+
+  private def seed(st: TableStore, table: String): Unit = {
+    st.create(table, Seq((1, "x")).toDF("id", "v").schema)
+    st.append(table, Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
+      .coalesce(1), 1000L)
+  }
+
+  test("morMerge retries once when a write lands mid-plan; both survive") {
+    val st = newStore()
+    seed(st, "mm")
+    var calls = 0
+    val snap = st.morMerge("mm", Seq(2).toDF("id"), Seq("id"), { matched =>
+      calls += 1
+      if (calls == 1) st.append("mm", Seq((4, "d")).toDF("id", "v"), 2000L)
+      val doomed = matched.filter(col("id") === 2)
+      (doomed, doomed.withColumn("v", lit("B")))
+    }, 3000L)
+    assert(calls == 2)
+    assert(rows(st, "mm") == Seq((1, "a"), (2, "B"), (3, "c"), (4, "d")))
+    assert(st.history("mm").count() == 3)
+    assert(snap.recordCount == 4)
+  }
+
+  test("branch merge retries once when the branch advances mid-plan; " +
+      "fast-forward equals the same ops on main") {
+    val st = newStore()
+    seed(st, "bm")
+    seed(st, "ctl")
+    st.createBranch("bm", "work")
+    def setB(matched: org.apache.spark.sql.DataFrame) =
+      matched.withColumn("v", when(col("id") === 2, lit("B"))
+        .otherwise(col("v")))
+    var calls = 0
+    st.merge("bm", Seq(2).toDF("id"), Seq("id"), { matched =>
+      calls += 1
+      if (calls == 1)
+        st.appendToBranch("bm", Seq((4, "d")).toDF("id", "v"), "work", 2000L)
+      setB(matched)
+    }, 3000L, branch = Some("work"))
+    assert(calls == 2)
+    val want = Seq((1, "a"), (2, "B"), (3, "c"), (4, "d"))
+    assert(st.readBranch("bm", "work").as[(Int, String)].collect().toSeq
+      .sorted == want)
+    assert(rows(st, "bm") == Seq((1, "a"), (2, "b"), (3, "c")))
+    // the same two writes, in the same order, on main
+    st.append("ctl", Seq((4, "d")).toDF("id", "v"), 2000L)
+    st.merge("ctl", Seq(2).toDF("id"), Seq("id"), setB, 3000L)
+    st.fastForward("bm", "work")
+    assert(rows(st, "bm") == want)
+    assert(rows(st, "bm") == rows(st, "ctl"))
+    def ops(t: String) = st.history(t).collect()
+      .map(r => (r.getLong(0), r.getString(2), r.getLong(4))).toSeq
+      .sortBy(_._1).map(h => (h._2, h._3))
+    assert(ops("bm") == ops("ctl"))
   }
 }
